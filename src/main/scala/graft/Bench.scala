@@ -731,10 +731,11 @@ object Bench {
         sampleControl(spark, sfDir, "stress8x") // load sentinel, sfDir corpus
         recordQueryEvent("stress8x", name)
         name -> (try {
-          // one untimed warm-up run per query: DevCcBench attribution
-          // showed the stress swing is JIT/codegen + page-cache
-          // warmth, not GC (gc_during ≤0.2 s while elapsed swung
-          // 3.7-15.5 s) — the batch loop warms ITS plans, not the
+          // one untimed warm-up run per query: the CC attribution
+          // (SCALING.md, the r6 simhash section) showed the stress
+          // swing is JIT/codegen + page-cache warmth, not GC
+          // (gc_during ≤0.2 s while elapsed swung 3.7-15.5 s) — the
+          // batch loop warms ITS plans, not the
           // stress tier's (different corpus, and CC's iterative
           // checkpoint/observe paths only JIT here)
           spark.catalog.clearCache()
@@ -1389,9 +1390,10 @@ object Bench {
       // stress tier's protocol): the global pass above is ~80 query
       // executions old by the time late queries are measured, and the
       // JIT state it built can be evicted/deoptimized in between —
-      // DevSim1AB measured sim1 decaying 0.68 → 0.30 s from a cold
-      // JIT vs a stable 0.26-0.30 s re-warmed, which is the round 3-5
-      // 0.29 ↔ 0.46 s oscillation on unchanged code.
+      // the sim1 A/B (SCALING.md, "the sim1 oscillation") measured
+      // sim1 decaying 0.68 → 0.30 s from a cold JIT vs a stable
+      // 0.26-0.30 s re-warmed, which is the round 3-5 0.29 ↔ 0.46 s
+      // oscillation on unchanged code.
       run(name)
       val samples = (1 to nSamples).map { _ =>
         spark.catalog.clearCache() // every sample starts data-cold

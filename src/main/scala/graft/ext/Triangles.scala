@@ -47,7 +47,7 @@ object Triangles {
     * explode. Same Σ outdeg² arithmetic, but as long-compares inside
     * one eval per EDGE instead of 82 M wedge rows (sf0.1 co-purchase)
     * streamed through SMJ-merge → broadcast-probe → 3-corner explode
-    * → hash agg. Measured (DevTriAB, sf0.1, 32 threads, outputs
+    * → hash agg. Measured (interleaved A/B, sf0.1, 32 threads, outputs
     * asserted identical): 7.0 → 2.3 s. The closing-side broadcast
     * and its 10 M-edge guard are GONE — the one distributed step is
     * an exchange of the edge list with adjacency payloads, each array

@@ -31,10 +31,10 @@ import graft.ext.Dedup
   *     exactly once, when the later one arrives;
   *  3. the dup-cluster fold ([[DedupClusterStream.Maintainer]] —
   *     star contraction + converge-or-throw CC) absorbs the edges;
-  *  4. the postings append: standing ∪ assigned-arrivals, re-rooted
-  *     on a fresh leaf per batch (the stats-compounding discipline —
-  *     an iterated union would otherwise both deepen the plan and
-  *     multiply inherited size stats).
+  *  4. the postings append: standing ∪ assigned-arrivals, cut per
+  *     batch by its [[Standing]] cell (an iterated union would
+  *     otherwise both deepen the plan and multiply inherited size
+  *     stats).
   *
   * Cost per batch is O(|batch| + |candidate pairs| + Δ-connected
   * state) — the standing cluster majority is untouched (the
@@ -68,59 +68,46 @@ object CurationStream {
     }
   }
 
-  /** In-session fused standing store. `centroids` is the serving
-    * geometry ([[graft.ext.IvfModel]] in production; specs pass a
-    * hand geometry). Frame lifetime matches the other Maintainers:
-    * frames returned by [[postings]]/[[clusters]] are invalidated by
-    * the next [[ingest]]/[[release]].
+  /** The fused foreachBatch body, shared with
+    * [[NearDupCurationStream]]: ONE `scan` of each batch, checkpointed,
+    * feeds `dupEdges` (arrivals × the standing store plus within the
+    * arrivals) to an inner [[DedupClusterStream.Maintainer]] AND the
+    * store append. Store and dedup state are two [[Standing]] cells;
+    * the scan's checkpoint belongs to the store's build, so the store
+    * cell releases it once the new store version is cut.
     */
-  final class Maintainer(centroids: Seq[Array[Double]]) extends Serializable {
+  private[stream] abstract class Fused(scan: DataFrame => DataFrame,
+      dupEdges: (DataFrame, Option[DataFrame]) => DataFrame) extends Serializable {
 
     private val dedup = new DedupClusterStream.Maintainer("src", "dst")
-    @volatile private var standing: Option[DataFrame] = None
-    @volatile private var handle: Option[org.apache.spark.rdd.RDD[_]] = None
+    protected val store = new Standing
 
-    /** The foreachBatch body: one assignment scan of the batch feeds
-      * the dup-edge derivation AND the postings append.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!batch.isEmpty) {
-        // the ONE scan: arrivals get their posting cell; persist so the
-        // edge joins and the postings append both read the same blocks
-        val (ab, abRdd) = Dedup.checkpointed(
-          StreamingAnn.assignCorpus(
-            batch.select(col("vec_id").cast("long").as("vec_id"),
-              col("embedding")), centroids))
-        // (a) duplicate evidence, blocked by the index's own cell
-        dedup.merge(dupEdges(ab, standing), batchId)
-        // (b) postings append; fresh-leaf re-root per batch (stats
-        // compounding — see DedupClusterStream.Maintainer.merge)
-        val next = standing match {
-          case Some(st) => st.unionAll(ab)
-          case None     => ab
-        }
-        val (cut0, rdd) = Dedup.checkpointed(next)
-        val cut = next.sparkSession.createDataFrame(cut0.rdd, cut0.schema)
-        handle.foreach(_.unpersist(blocking = false))
-        standing = Some(cut)
-        handle = Some(rdd)
-        abRdd.unpersist(blocking = false)
+    def ingest(batch: DataFrame, batchId: Long): Unit =
+      store.fold(batch, batchId) { standing =>
+        val (newly, _) = Dedup.checkpointed(scan(batch))
+        dedup.merge(dupEdges(newly, standing), batchId)
+        standing.fold(newly)(_.unionAll(newly))
       }
-    }
-
-    /** Current servable postings (vec_id, embedding, cell) — feed to
-      * [[StreamingAnn.scoreIvf]] exactly like an [[IvfServer]] index.
-      */
-    def postings: Option[DataFrame] = standing
 
     /** Current (node → component) duplicate-cluster assignment. */
     def clusters: Option[DataFrame] = dedup.assignments
 
-    def release(): Unit = synchronized {
-      handle.foreach(_.unpersist(blocking = false))
-      handle = None
-      standing = None
-      dedup.release()
-    }
+    def release(): Unit = { store.release(); dedup.release() }
+  }
+
+  /** In-session fused standing store. `centroids` is the serving
+    * geometry ([[graft.ext.IvfModel]] in production; specs pass a
+    * hand geometry).
+    */
+  final class Maintainer(centroids: Seq[Array[Double]]) extends Fused(
+      batch => StreamingAnn.assignCorpus(
+        batch.select(col("vec_id").cast("long").as("vec_id"), col("embedding")),
+        centroids),
+      dupEdges) {
+
+    /** Current servable postings (vec_id, embedding, cell) — feed to
+      * [[StreamingAnn.scoreIvf]] exactly like an [[IvfServer]] index.
+      */
+    def postings: Option[DataFrame] = store.current
   }
 }

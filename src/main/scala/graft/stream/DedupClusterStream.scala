@@ -41,10 +41,11 @@ import graft.ext.Dedup
   * |non-singleton docs|. In production the standing set is a keyed
   * table and this fold is a MERGE over touched components;
   * [[Maintainer]] realizes it in-session for the stream ≡ batch
-  * proof, cutting lineage per batch (localCheckpoint — the
-  * LabelProp/CC loop discipline) so plan depth stays constant at any
-  * stream length. Recovery is the sink's: the standing assignment IS
-  * the state (restart resumes from the last committed assignment).
+  * proof, on a [[Standing]] cell that cuts lineage and stats per
+  * batch (each fold runs ~20 CC join rounds, the case that found the
+  * stats cut — SCALING.md, round 14). Recovery is the sink's: the
+  * standing assignment IS the state (restart resumes from the last
+  * committed assignment).
   */
 object DedupClusterStream {
 
@@ -82,62 +83,28 @@ object DedupClusterStream {
   }
 
   /** In-session standing store for the foreachBatch sink: folds each
-    * micro-batch of edges with [[mergeBatch]] and localCheckpoints
-    * the result so lineage stays flat across batches.
-    *
-    * Frame lifetime (the [[Scd2Stream.Maintainer]] contract): a frame
-    * returned by [[assignments]] is backed by the localCheckpoint RDD
-    * that the NEXT merge()/release() unpersists — execute it within
-    * the current micro-batch or snapshot it first.
+    * micro-batch of edges with [[mergeBatch]] into a [[Standing]] cell
+    * (frame lifetime and replay rules there).
     */
   final class Maintainer(srcCol: String, dstCol: String)
       extends Serializable {
 
-    @volatile private var standing: Option[DataFrame] = None
-    @volatile private var handle: Option[org.apache.spark.rdd.RDD[_]] = None
+    private val state = new Standing
 
-    /** The foreachBatch body.
-      *
-      * The standing frame is re-rooted on a FRESH leaf (createDataFrame
-      * over the checkpointed rows) each batch, not just localCheckpointed:
-      * localCheckpoint preserves the source plan's COMPUTED statistics,
-      * and one fold batch runs ~20 CC join rounds whose size estimates
-      * MULTIPLY — inherited stats therefore grow ~20× in bit-length per
-      * micro-batch, and by batch ~6 Catalyst's size-only stats visitor
-      * is multiplying million-digit BigIntegers on the driver (measured:
-      * an edge-at-a-time stream spent 18 CPU-minutes inside
-      * BigInteger.multiplyToomCook3 before this fix). A fresh leaf
-      * restarts every batch from the constant default size estimate, so
-      * planning cost stays flat at any stream length — the stats-side
-      * twin of the lineage cut.
-      */
-    def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!batch.isEmpty) {
-        val next = standing match {
-          case Some(st) => mergeBatch(st, batch, srcCol, dstCol)
-          case None =>
-            Dedup.connectedComponents(
-              batch.select(col(srcCol).cast("long").as("a"),
-                col(dstCol).cast("long").as("b")), "a", "b")
-              .select("node", "comp")
-        }
-        val (cut0, rdd) = Dedup.checkpointed(next)
-        val cut = next.sparkSession.createDataFrame(cut0.rdd, cut0.schema)
-        handle.foreach(_.unpersist(blocking = false))
-        standing = Some(cut)
-        handle = Some(rdd)
+    /** The foreachBatch body. */
+    def merge(batch: DataFrame, batchId: Long): Unit =
+      state.fold(batch, batchId) {
+        case Some(st) => mergeBatch(st, batch, srcCol, dstCol)
+        case None =>
+          Dedup.connectedComponents(
+            batch.select(col(srcCol).cast("long").as("a"),
+              col(dstCol).cast("long").as("b")), "a", "b")
+            .select("node", "comp")
       }
-    }
 
-    /** Current (node, comp) assignment — empty before the first batch;
-      * invalidated by the next merge()/release().
-      */
-    def assignments: Option[DataFrame] = standing
+    /** Current (node, comp) assignment — empty before the first batch. */
+    def assignments: Option[DataFrame] = state.current
 
-    def release(): Unit = synchronized {
-      handle.foreach(_.unpersist(blocking = false))
-      handle = None
-      standing = None
-    }
+    def release(): Unit = state.release()
   }
 }

@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, NearDup, TextAnalysis}
+import graft.ext.{NearDup, TextAnalysis}
 
 /** NEAR-dup generalization of [[CurationStream]] (the fold shape that
   * file documents as "near-dup generalizes by adding banding keys
@@ -91,50 +91,16 @@ object NearDupCurationStream {
     }
   }
 
-  /** In-session fused standing store; same lifetime contract as
-    * [[CurationStream.Maintainer]].
+  /** In-session fused standing store: the [[CurationStream.Fused]]
+    * body over a signature scan and band-key candidates.
     */
   final class Maintainer(jacThreshold: Double, minhashK: Int = 16,
-      shingleK: Int = 3) extends Serializable {
-
-    private val dedup = new DedupClusterStream.Maintainer("src", "dst")
-    @volatile private var standing: Option[DataFrame] = None
-    @volatile private var handle: Option[org.apache.spark.rdd.RDD[_]] = None
-
-    /** The foreachBatch body: one signature scan feeds candidate
-      * generation AND the store append.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!batch.isEmpty) {
-        val (ab, abRdd) = Dedup.checkpointed(
-          signatures(batch, minhashK, shingleK))
-        dedup.merge(dupEdges(ab, standing, jacThreshold), batchId)
-        val next = standing match {
-          case Some(st) => st.unionAll(ab)
-          case None     => ab
-        }
-        val (cut0, rdd) = Dedup.checkpointed(next)
-        val cut = next.sparkSession.createDataFrame(cut0.rdd, cut0.schema)
-        handle.foreach(_.unpersist(blocking = false))
-        standing = Some(cut)
-        handle = Some(rdd)
-        abRdd.unpersist(blocking = false)
-      }
-    }
+      shingleK: Int = 3) extends CurationStream.Fused(
+      signatures(_, minhashK, shingleK), dupEdges(_, _, jacThreshold)) {
 
     /** Current standing signature store (doc_id, band, h1, h2, hs) —
       * the banding index a lookup path probes by band key.
       */
-    def bandIndex: Option[DataFrame] = standing
-
-    /** Current (node → component) near-dup cluster assignment. */
-    def clusters: Option[DataFrame] = dedup.assignments
-
-    def release(): Unit = synchronized {
-      handle.foreach(_.unpersist(blocking = false))
-      handle = None
-      standing = None
-      dedup.release()
-    }
+    def bandIndex: Option[DataFrame] = store.current
   }
 }

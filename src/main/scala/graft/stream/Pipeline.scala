@@ -110,15 +110,19 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
   }
 
   /** One fused batch: both bodies over a single persisted scan. */
-  def runBatch(batch: DataFrame, epochId: Long): Unit = {
-    val ts = config.clock()
+  def runBatch(batch: DataFrame, epochId: Long): Unit =
+    cachedBatch(batch) { (cached, ts) =>
+      computeBatchStats(cached, ts)
+      writeAggregations(cached, ts)
+    }
+
+  /** The wrapper every foreachBatch body runs in: persist the batch,
+    * skip it if empty, run `body` at one `clock()` reading, unpersist.
+    */
+  private def cachedBatch(batch: DataFrame)(body: (DataFrame, Double) => Unit): Unit = {
     val cached = batch.persist()
-    try {
-      if (!cached.isEmpty) {
-        computeBatchStats(cached, ts)
-        writeAggregations(cached, ts)
-      }
-    } finally { cached.unpersist(); () }
+    try { if (!cached.isEmpty) body(cached, config.clock()) }
+    finally { cached.unpersist(); () }
   }
 
   /** Start the pipeline over a file-stream source (S1) — the reference's
@@ -144,21 +148,13 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
         .outputMode("update")
         .trigger(config.trigger)
         .option("checkpointLocation", s"$checkpointRoot/stats")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val cached = df.persist()
-          try { if (!cached.isEmpty) computeBatchStats(cached, config.clock()) }
-          finally { cached.unpersist(); () }
-        }
+        .foreachBatch { (df: DataFrame, _: Long) => cachedBatch(df)(computeBatchStats) }
         .start()
       val aggQuery = stream.writeStream
         .outputMode("update")
         .trigger(config.trigger)
         .option("checkpointLocation", s"$checkpointRoot/agg")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val cached = df.persist()
-          try { if (!cached.isEmpty) writeAggregations(cached, config.clock()) }
-          finally { cached.unpersist(); () }
-        }
+        .foreachBatch { (df: DataFrame, _: Long) => cachedBatch(df)(writeAggregations) }
         .start()
       Seq(statsQuery, aggQuery)
     }

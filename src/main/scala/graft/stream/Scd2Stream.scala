@@ -3,7 +3,6 @@ package graft.stream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.Dedup
 import graft.ops.Scd2
 
 /** Streaming SCD2 maintenance — the foreachBatch operational form of
@@ -36,10 +35,8 @@ import graft.ops.Scd2
   * the value-transition count, ≪ log size on low-churn dimensions.
   * In production the standing set is a keyed table and this fold is
   * a MERGE INTO over the touched keys; [[Maintainer]] realizes the
-  * same fold in-session for the stream ≡ batch proof, cutting
-  * lineage per batch (localCheckpoint, the LabelProp/CC loop
-  * discipline) so plan depth stays CONSTANT at any stream length —
-  * without the cut, batch n would replay n−1 merges of window plans.
+  * same fold in-session for the stream ≡ batch proof, on a
+  * [[Standing]] cell that cuts lineage and stats per batch.
   * Recovery is the sink's: the standing table IS the state, so a
   * restart resumes from whatever change-point set was last
   * committed, with no separate state store to reconcile.
@@ -61,65 +58,35 @@ object Scd2Stream {
   }
 
   /** In-session standing store for the foreachBatch sink: folds each
-    * micro-batch with [[mergeBatch]], localCheckpoints the result so
-    * lineage stays flat, and serves the full effective-dated history
-    * on demand (versions, [valid_from, valid_to), is_current) — the
-    * same rows [[Scd2.build]] would produce from the full log.
+    * micro-batch with [[mergeBatch]] into a [[Standing]] cell (frame
+    * lifetime and replay rules there) and serves the full
+    * effective-dated history on demand (versions, [valid_from,
+    * valid_to), is_current) — the same rows [[Scd2.build]] would
+    * produce from the full log.
     */
   final class Maintainer(key: String, value: String,
       ts: String, seq: String) extends Serializable {
 
-    @volatile private var standing: Option[DataFrame] = None
-    @volatile private var handle: Option[org.apache.spark.rdd.RDD[_]] = None
+    private val state = new Standing
 
-    /** The foreachBatch body. Synchronized so that merge/release
-      * updates to the (standing, handle) pair are atomic with each
-      * other. NOTE the frame-lifetime contract this does NOT cover:
-      * a DataFrame previously returned by [[changePoints]]/[[history]]
-      * is backed by the localCheckpoint RDD that THIS call unpersists
-      * — synchronization cannot make such a frame safe to execute
-      * after the next merge (a localCheckpointed plan cannot
-      * recompute its blocks). See the getter docs.
-      */
-    def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!batch.isEmpty) {
-        val next = standing match {
-          case Some(st) => mergeBatch(st, batch, key, value, ts, seq)
-          case None => Scd2.changePoints(batch, key, value, ts, seq)
-        }
-        val (cut, rdd) = Dedup.checkpointed(next)
-        handle.foreach(_.unpersist(blocking = false))
-        standing = Some(cut)
-        handle = Some(rdd)
+    /** The foreachBatch body. */
+    def merge(batch: DataFrame, batchId: Long): Unit =
+      state.fold(batch, batchId) {
+        case Some(st) => mergeBatch(st, batch, key, value, ts, seq)
+        case None => Scd2.changePoints(batch, key, value, ts, seq)
       }
-    }
 
-    /** Current standing change points (empty before the first batch).
-      *
-      * LIFETIME: the returned frame is valid only until the next
-      * [[merge]]/[[release]] — it is backed by a localCheckpoint RDD
-      * that the next merge unpersists, and a localCheckpointed plan
-      * cannot recompute lost blocks. Execute (collect/write) it
-      * within the current micro-batch, or snapshot it first.
-      */
-    def changePoints: Option[DataFrame] = standing
+    /** Current standing change points (empty before the first batch). */
+    def changePoints: Option[DataFrame] = state.current
 
     /** The effective-dated history: identical to running
       * [[Scd2.build]] over the full change log consumed so far
       * (changePoints is idempotent, so build over the standing set
       * re-derives valid_to / version / is_current exactly).
-      *
-      * Same lifetime contract as [[changePoints]]: the frame reads
-      * the current standing checkpoint and is invalidated by the
-      * next [[merge]]/[[release]].
       */
     def history(): Option[DataFrame] =
-      standing.map(st => Scd2.build(st, key, value, ts, seq))
+      state.current.map(st => Scd2.build(st, key, value, ts, seq))
 
-    def release(): Unit = synchronized {
-      handle.foreach(_.unpersist(blocking = false))
-      handle = None
-      standing = None
-    }
+    def release(): Unit = state.release()
   }
 }

@@ -60,13 +60,14 @@ class CurationStreamSpec extends SparkSpec {
 
   private def runStream(batches: Seq[Seq[Vec]], name: String)
       : (Map[Long, Long], Map[Long, Long]) = {
+    val before = spark.sparkContext.getPersistentRDDs
     val m = new CurationStream.Maintainer(cents)
     val input = MemoryStream[Vec](spark)
     val query = input.toDS().writeStream
       .foreachBatch((ds: org.apache.spark.sql.Dataset[Vec], id: Long) =>
         m.ingest(ds.toDF(), id))
       .outputMode("update").queryName(name).start()
-    try {
+    val out = try {
       batches.foreach { b =>
         if (b.nonEmpty) input.addData(b)
         query.processAllAvailable()
@@ -77,6 +78,9 @@ class CurationStreamSpec extends SparkSpec {
       query.stop()
       m.release()
     }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before.keySet,
+      s"$name: folds and release() must free every block they persisted")
+    out
   }
 
   private def batchTwin(vs: Seq[Vec]): (Map[Long, Long], Map[Long, Long]) = {
@@ -164,6 +168,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("serving parity: scoreIvf over the maintained postings == over " +
       "the one-shot batch index") {
+    val before = spark.sparkContext.getPersistentRDDs
     val m = new CurationStream.Maintainer(cents)
     try {
       corpus.grouped(5).zipWithIndex.foreach { case (b, i) =>
@@ -179,5 +184,30 @@ class CurationStreamSpec extends SparkSpec {
       val viaBatch = scored(StreamingAnn.assignCorpus(corpusDf(corpus), cents))
       assert(viaStream == viaBatch && viaStream.nonEmpty)
     } finally m.release()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before.keySet,
+      "serving parity: ingest and release() must free every block they persisted")
+  }
+
+  test("replay: a re-run batchId folds nothing in the store or the dedup " +
+      "cell; a lower batchId throws") {
+    // foreachBatch is at-least-once: a failed epoch re-runs with the
+    // same batchId. The duplicate pair {1,2} would double the postings
+    // and feed the dedup fold the pair's cross edges again on a replay.
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val b0 = corpusDf(corpus.filter(v => v.vec_id <= 2))
+    val once = new CurationStream.Maintainer(cents)
+    val twice = new CurationStream.Maintainer(cents)
+    try {
+      once.ingest(b0, 0L)
+      twice.ingest(b0, 0L)
+      twice.ingest(b0, 0L)
+      assert(rows(twice.postings.get) == rows(once.postings.get))
+      assert(rows(twice.postings.get).length == 2)
+      assert(rows(twice.clusters.get) == rows(once.clusters.get))
+      twice.ingest(corpusDf(corpus.filter(_.vec_id == 3L)), 1L)
+      val e = intercept[IllegalArgumentException](twice.ingest(b0, 0L))
+      assert(e.getMessage.contains("batchId 0") &&
+        e.getMessage.contains("batchId 1"), e.getMessage)
+    } finally { once.release(); twice.release() }
   }
 }

@@ -30,13 +30,14 @@ class DedupClusterStreamSpec extends SparkSpec {
     }.toMap
 
   private def runStream(batches: Seq[Seq[Edge]], name: String): Map[Long, Long] = {
+    val before = spark.sparkContext.getPersistentRDDs
     val m = new DedupClusterStream.Maintainer("src", "dst")
     val input = MemoryStream[Edge](spark)
     val query = input.toDS().writeStream
       .foreachBatch((ds: org.apache.spark.sql.Dataset[Edge], id: Long) =>
         m.merge(ds.toDF(), id))
       .outputMode("update").queryName(name).start()
-    try {
+    val out = try {
       batches.foreach { b =>
         if (b.nonEmpty) input.addData(b)
         query.processAllAvailable()
@@ -47,6 +48,9 @@ class DedupClusterStreamSpec extends SparkSpec {
       query.stop()
       m.release()
     }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before.keySet,
+      s"$name: folds and release() must free every block they persisted")
+    out
   }
 
   private def batchCC(edges: Seq[Edge]): Map[Long, Long] =

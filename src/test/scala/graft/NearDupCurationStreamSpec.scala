@@ -59,13 +59,14 @@ class NearDupCurationStreamSpec extends SparkSpec {
 
   private def runStream(batches: Seq[Seq[Doc]], name: String)
       : (Set[(Long, Int, Long, Long)], Map[Long, Long]) = {
+    val before = spark.sparkContext.getPersistentRDDs
     val m = new NearDupCurationStream.Maintainer(Threshold, MinhashK, ShingleK)
     val input = MemoryStream[Doc](spark)
     val query = input.toDS().writeStream
       .foreachBatch((ds: org.apache.spark.sql.Dataset[Doc], id: Long) =>
         m.ingest(ds.toDF(), id))
       .outputMode("update").queryName(name).start()
-    try {
+    val out = try {
       batches.foreach { b =>
         if (b.nonEmpty) input.addData(b)
         query.processAllAvailable()
@@ -76,6 +77,9 @@ class NearDupCurationStreamSpec extends SparkSpec {
       query.stop()
       m.release()
     }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before.keySet,
+      s"$name: folds and release() must free every block they persisted")
+    out
   }
 
   private def batchTwin(vs: Seq[Doc])

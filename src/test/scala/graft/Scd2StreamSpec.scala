@@ -51,6 +51,7 @@ class Scd2StreamSpec extends SparkSpec {
     }.sortBy(t => (t._1, t._6))
 
   private def runStream(batches: Seq[Seq[Change]], name: String): Seq[Version] = {
+    val before = spark.sparkContext.getPersistentRDDs
     val m = new Scd2Stream.Maintainer("k", "v", "ts", "seq")
     val input = MemoryStream[Change](spark)
     val query = input.toDS().writeStream
@@ -62,6 +63,8 @@ class Scd2StreamSpec extends SparkSpec {
     val hist = m.history().getOrElse(fail("no batches reached the maintainer"))
     val rows = asTuples(hist) // materialize before release
     m.release()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before.keySet,
+      s"$name: folds and release() must free every block they persisted")
     rows
   }
 
